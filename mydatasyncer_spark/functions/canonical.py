@@ -80,9 +80,15 @@ def _trim_decimal_zeros(s: Column) -> Column:
     return F.when(has_frac, trimmed).otherwise(s)
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quoted identifier: resolves ``name`` as one top-level
+    column even when it contains a dot."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def canonical_col(df: DataFrame, name: str) -> Column:
     """``canonical_str`` resolved against ``df``'s schema."""
-    return canonical_str(df[name], df.schema[name].dataType)
+    return canonical_str(df[quote_ident(name)], df.schema[name].dataType)
 
 
 def row_fingerprint(df: DataFrame, cols: list[str]) -> Column:

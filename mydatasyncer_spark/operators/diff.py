@@ -2,23 +2,33 @@
 
 ``diffData`` (ref: dbsync.go:762-780) iterates file records and
 probes a driver-RAM hash map of the DB snapshot. Re-expressed
-Spark-first, that dataflow is three declarative joins on a
-canonicalized primary-key column:
+Spark-first, that dataflow is ONE full-outer join on a canonicalized
+primary-key column (:func:`diff_changes`), each side collapsed to
+``(canonical key, row fingerprint, struct of the sync columns)``; a
+row is then classified by which side it came from:
 
-- **insert**  = file LEFT ANTI db      (ref: dbsync.go:731-733, J2)
-- **update**  = file INNER db, any column differs in canonical string
-  space (ref: dbsync.go:734-739 + compareRecords 695-715, J3)
-- **delete**  = db LEFT ANTI file, gated on ``delete_not_in_file``
+- **insert**  = key on the file side only   (ref: dbsync.go:731-733, J2)
+- **update**  = key on both sides, fingerprints differ in canonical
+  string space (ref: dbsync.go:734-739 + compareRecords 695-715, J3)
+- **delete**  = key on the DB side only, gated on ``delete_not_in_file``
   (ref: findRecordsToDelete, dbsync.go:746-758, J4)
+
+:func:`diff_snapshots` hands out the three legs as filters and
+projections of that one classified frame, so pinning it once
+(:meth:`DiffResult.persist`) serves counts, samples, staging and the
+per-row apply without re-reading either snapshot. The leg-wise joins
+(:func:`detect_inserts` / :func:`detect_updates` /
+:func:`detect_deletes`) stay as standalone operators and as the
+reference the classification is tested against.
 
 Cross-type key equality (JSON ``123`` == DB ``"123"``, ref:
 dbsync.go:28-48, J5) comes from joining on ``canonical_str(pk)``
 rather than the raw column.
 
-Scale notes: all three joins share the same join key, so at 100 TB
-they hash-partition identically and AQE can reuse the shuffle; a
-small DB side gets broadcast automatically (autoBroadcastJoinThreshold
-/ AQE local-join conversion). Nothing is materialized on the driver.
+Scale notes: the classification shuffles each snapshot once, hashed
+on the canonical key (a full outer join is never broadcast, so both
+sides always cross one exchange). Unchanged rows never leave the
+join, and nothing is materialized on the driver.
 """
 
 from __future__ import annotations
@@ -29,11 +39,26 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mydatasyncer_spark.functions.canonical import canonical_col, row_fingerprint
+from mydatasyncer_spark.functions.canonical import (
+    canonical_col,
+    quote_ident,
+    row_fingerprint,
+)
 from mydatasyncer_spark.operators.partitioning import ensure_min_parallelism
 
 _KEY = "_pk_canon"
 BEFORE_COL = "_before"
+#: classification label column of :func:`diff_changes`
+KIND_COL = "_kind"
+#: after-image struct column of :func:`diff_changes` (NULL for deletes)
+AFTER_COL = "_after"
+_KINDS = ("insert", "update", "delete")
+
+
+def _cols(names: list[str]) -> list[Column]:
+    """Exact-name references, so a column whose name holds a dot
+    resolves as itself and not as a struct field access."""
+    return [F.col(quote_ident(c)) for c in names]
 
 
 @dataclass
@@ -43,18 +68,46 @@ class DiffResult:
     ``to_update`` carries the *after* (file-side) values in the sync
     columns plus a ``_before`` struct with the DB-side values
     (ref: UpdateOperation, dbsync.go:132-135).
+
+    ``changes`` is the classified frame of :func:`diff_changes` that
+    :func:`diff_snapshots` derives all three legs from. When it is set,
+    :meth:`persist` pins that one frame (every leg then reads the pin)
+    and :meth:`counts` is one ``groupBy(_kind)`` aggregate over it. A
+    triple assembled by hand leaves it ``None`` and is pinned and
+    counted leg by leg.
     """
 
     to_insert: DataFrame
     to_update: DataFrame
     to_delete: DataFrame
+    changes: DataFrame | None = None
+
+    def _frames(self) -> list[DataFrame]:
+        if self.changes is not None:
+            return [self.changes]
+        return [self.to_insert, self.to_update, self.to_delete]
+
+    def persist(self) -> DiffResult:
+        for df in self._frames():
+            df.persist()
+        return self
+
+    def unpersist(self) -> None:
+        for df in self._frames():
+            df.unpersist()
 
     def counts(self) -> dict[str, int]:
-        return {
-            "insert": self.to_insert.count(),
-            "update": self.to_update.count(),
-            "delete": self.to_delete.count(),
+        if self.changes is None:
+            return {
+                "insert": self.to_insert.count(),
+                "update": self.to_update.count(),
+                "delete": self.to_delete.count(),
+            }
+        by_kind = {
+            r[KIND_COL]: r["count"]
+            for r in self.changes.groupBy(KIND_COL).count().collect()
         }
+        return {k: by_kind.get(k, 0) for k in _KINDS}
 
 
 def with_canonical_key(df: DataFrame, primary_key: str) -> DataFrame:
@@ -110,18 +163,18 @@ def detect_updates(
     Output: after-values in ``columns`` + ``_before`` struct of the
     DB-side values.
     """
-    f = with_canonical_key(file_df.select(*columns), primary_key)
-    d = with_canonical_key(db_df.select(*columns), primary_key)
+    f = with_canonical_key(file_df.select(*_cols(columns)), primary_key)
+    d = with_canonical_key(db_df.select(*_cols(columns)), primary_key)
     joined = f.alias("f").join(d.alias("d"), _KEY, "inner")
     fa, da = joined.select("f.*").drop(_KEY), joined.select("d.*").drop(_KEY)
     differs = row_fingerprint(fa, columns) != row_fingerprint(da, columns)
     return (
         joined.filter(differs)
         .select(
-            *[F.col(f"f.{c}").alias(c) for c in columns],
-            F.struct(*[F.col(f"d.{c}").alias(c) for c in columns]).alias(
-                BEFORE_COL
-            ),
+            *[F.col(f"f.{quote_ident(c)}").alias(c) for c in columns],
+            F.struct(
+                *[F.col(f"d.{quote_ident(c)}").alias(c) for c in columns]
+            ).alias(BEFORE_COL),
         )
     )
 
@@ -150,13 +203,13 @@ def diff_counts(
 ) -> DataFrame:
     """One-pass plan counts (the dry-run's J1 in its cheapest form).
 
-    Where :func:`diff_snapshots` builds three joins (fine when the
-    legs themselves are needed), the counts triple only needs row
-    *classification* — so this is a single full-outer join in which
+    :func:`diff_snapshots` runs the same full-outer classification but
+    carries every sync column through it, because its legs need the
+    values; the counts triple only needs the classification, so here
     each side is pre-collapsed to ``(canonical_key, row_fingerprint)``.
-    Two narrow shuffles instead of six wide scans; at 100 TB the
-    shuffle payload drops from every sync column to 16 bytes/row.
-    Returns a one-row DataFrame ``(n_insert, n_update, n_delete)``.
+    At 100 TB the shuffle payload drops from every sync column to 16
+    bytes/row. Returns a one-row DataFrame ``(n_insert, n_update,
+    n_delete)``.
     """
     if columns is None:
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
@@ -190,12 +243,6 @@ def _classify_counts(
     )
 
 
-#: classification label column of :func:`diff_changes`
-KIND_COL = "_kind"
-#: after-image struct column of :func:`diff_changes` (NULL for deletes)
-AFTER_COL = "_after"
-
-
 def diff_changes(
     file_df: DataFrame,
     db_df: DataFrame,
@@ -205,16 +252,16 @@ def diff_changes(
     delete_not_in_file: bool = True,
 ) -> DataFrame:
     """One-pass classified change rows — the row-level twin of
-    :func:`diff_counts`.
+    :func:`diff_counts`, and the frame :func:`diff_snapshots` derives
+    its three legs from.
 
-    Where :func:`diff_snapshots` answers "give me the three legs" with
-    three wide joins (each rescanning both snapshots), many consumers
-    only need *which rows changed and how* plus a few payload columns
-    (IVM delta derivation, affected-key scopes, SCD2 maintenance). For
-    those, one full-outer join over ``(canonical_key, row_fingerprint,
-    payload...)`` classifies every row in a single narrow pass: at
-    100 TB the exchange carries 16 bytes + the payload per row, once,
-    instead of every sync column three-to-five times.
+    One full-outer join over ``(canonical_key, row_fingerprint,
+    payload...)`` classifies every row in a single pass: at 100 TB the
+    exchange carries 16 bytes + the payload per row, once. Consumers
+    that only need *which rows changed and how* plus a few columns
+    (IVM delta derivation, affected-key scopes, SCD2 maintenance) pass
+    a narrow ``payload``; :func:`diff_snapshots` passes every sync
+    column.
 
     Returns one row per changed key with:
 
@@ -228,25 +275,27 @@ def diff_changes(
     the same canonical fingerprint inequality as :func:`row_differs`
     (same collision trade-off). Unchanged rows never leave the join.
 
-    Assumes the primary key is unique per side (the snapshot
-    contract; duplicate keys would classify per joined PAIR where the
-    leg-wise triple classifies per row).
+    A full outer join's rows are exactly the file-only rows, the
+    matched pairs and the DB-only rows, so this classifies row for row
+    like :func:`detect_inserts` / :func:`detect_updates` /
+    :func:`detect_deletes`, repeated and NULL keys included (an update
+    is one matched pair, as in the inner join of :func:`detect_updates`).
     """
     if columns is None:
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
     if payload is None:
         payload = columns
-    f = with_canonical_key(file_df.select(*columns), primary_key)
-    d = with_canonical_key(db_df.select(*columns), primary_key)
+    f = with_canonical_key(file_df.select(*_cols(columns)), primary_key)
+    d = with_canonical_key(db_df.select(*_cols(columns)), primary_key)
     fs = f.select(
         F.col(_KEY),
         row_fingerprint(f, columns).alias("_f_fp"),
-        F.struct(*[F.col(c) for c in payload]).alias(AFTER_COL),
+        F.struct(*_cols(payload)).alias(AFTER_COL),
     )
     ds = d.select(
         F.col(_KEY),
         row_fingerprint(d, columns).alias("_d_fp"),
-        F.struct(*[F.col(c) for c in payload]).alias(BEFORE_COL),
+        F.struct(*_cols(payload)).alias(BEFORE_COL),
     )
     j = fs.join(ds, _KEY, "full_outer")
     # a present side's fingerprint is never NULL (xxhash64 over
@@ -373,10 +422,12 @@ def diff_counts_pruned(
         return with_canonical_key(b, primary_key)
 
     def narrow(k: DataFrame, fp_alias: str) -> DataFrame:
-        # project to the 17-byte/row frame BEFORE any widening
-        # exchange: the exchange then carries (bucket, key,
-        # fingerprint) instead of every sync column, and the
-        # fingerprint is computed exactly once per source row
+        # the 17-byte/row (bucket, key, fingerprint) frame; the
+        # fingerprint is computed exactly once per source row. Where
+        # this sits against the widening exchange differs per path:
+        # the pin path widens FIRST (so the fingerprint runs across
+        # the cluster), the one-job path narrows first (so its
+        # exchange carries 17 bytes/row, not every sync column)
         return k.select(
             "_bucket",
             F.col(_KEY),
@@ -468,14 +519,14 @@ def diff_counts_pruned(
         )
         changed = F.broadcast(changed_of(fs, ds))
 
-        def pruned(s: DataFrame, fp_alias: str) -> DataFrame:
+        def pruned(s: DataFrame) -> DataFrame:
             # broadcast semi-join on the changed set: no driver
             # collect, no barrier — only the changed slice flows into
             # the classification join
             return s.join(changed, "_bucket", "left_semi").drop("_bucket")
 
         out = _classify_counts(
-            pruned(fs, "_f_fp"), pruned(ds, "_d_fp"), delete_not_in_file
+            pruned(fs), pruned(ds), delete_not_in_file
         )
     return out.select(
         *[
@@ -536,7 +587,7 @@ def changed_buckets(
         # caller can bucket by a stored partition column that isn't a
         # sync column — e.g. the SCD2 table's _pk_bucket, which makes
         # the downstream pruned re-read partition-prunable
-        p = df.select(bucket_fn(df).alias("_bucket"), *columns)
+        p = df.select(bucket_fn(df).alias("_bucket"), *_cols(columns))
         return (
             p.select(
                 F.col("_bucket"),
@@ -578,14 +629,14 @@ def diff_snapshots_pruned(
     delete_not_in_file: bool = True,
     bucket_fn: "Callable[[DataFrame], Column] | None" = None,
 ) -> DiffResult:
-    """:func:`diff_snapshots`, but the three wide joins only read the
-    key-hash buckets whose fingerprints changed.
+    """:func:`diff_snapshots`, but its classification join only reads
+    the key-hash buckets whose fingerprints changed.
 
     Why this matters at 100 TB: a daily sync typically touches a tiny
     fraction of rows, yet the full diff still shuffles BOTH entire
     snapshots into the join. The bucket-fingerprint pre-pass costs one
     narrow scan per side (16 bytes/row into a map-side partial agg,
-    ``n_buckets`` rows out) and then the wide joins run over only the
+    ``n_buckets`` rows out) and then the wide join runs over only the
     changed slice — with unchanged data never entering an exchange.
     When the snapshots are *stored* bucketed on the same key hash
     (``sources/writers.write_partitioned`` on :func:`bucket_col`), the
@@ -599,21 +650,18 @@ def diff_snapshots_pruned(
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
     if bucket_fn is None:
         bucket_fn = lambda d: bucket_col(d, primary_key, n_buckets)  # noqa: E731
-    file_p = file_df.select(*columns)
-    db_p = db_df.select(*columns)
+    file_p = file_df.select(*_cols(columns))
+    db_p = db_df.select(*_cols(columns))
     buckets = changed_buckets(
         file_p, db_p, primary_key, columns, n_buckets, bucket_fn
     )
-    if not buckets:
-        empty = DiffResult(
-            file_p.limit(0),
-            detect_updates(file_p.limit(0), db_p.limit(0), primary_key, columns),
-            db_p.limit(0),
-        )
-        return empty
-    fb = file_p.filter(bucket_fn(file_p).isin(buckets))
-    db = db_p.filter(bucket_fn(db_p).isin(buckets))
-    return diff_snapshots(fb, db, primary_key, columns, delete_not_in_file)
+    if buckets:
+        file_p = file_p.filter(bucket_fn(file_p).isin(buckets))
+        db_p = db_p.filter(bucket_fn(db_p).isin(buckets))
+    else:
+        # nothing changed: empty legs, no second scan
+        file_p, db_p = file_p.limit(0), db_p.limit(0)
+    return diff_snapshots(file_p, db_p, primary_key, columns, delete_not_in_file)
 
 
 def diff_snapshots(
@@ -625,18 +673,33 @@ def diff_snapshots(
 ) -> DiffResult:
     """Full diff (J1): insert/update/delete triple over sync columns.
 
-    When ``delete_not_in_file`` is false the delete leg is an empty
-    DataFrame and the J4 join is never built at all (the reference
-    gates it the same way, ref: dbsync.go:746-749).
+    One :func:`diff_changes` join classifies every row; each leg is a
+    filter of that classified frame projected back to the sync
+    columns (``to_update`` keeps the ``_before`` struct), so the three
+    legs share one plan and one pin (:meth:`DiffResult.persist`).
+    Leg schemas match the leg-wise :func:`detect_inserts` /
+    :func:`detect_updates` / :func:`detect_deletes`: inserts and
+    updates carry the file side's types, deletes the DB side's.
+
+    When ``delete_not_in_file`` is false, DB-only rows are never
+    classified, so the delete leg is empty (the reference gates it the
+    same way, ref: dbsync.go:746-749).
     """
     if columns is None:
         columns = [c for c in file_df.columns if c in set(db_df.columns)]
-    file_p = file_df.select(*columns)
-    db_p = db_df.select(*columns)
-    to_insert = detect_inserts(file_p, db_p, primary_key)
-    to_update = detect_updates(file_p, db_p, primary_key, columns)
-    if delete_not_in_file:
-        to_delete = detect_deletes(file_p, db_p, primary_key)
-    else:
-        to_delete = db_p.limit(0)
-    return DiffResult(to_insert, to_update, to_delete)
+    changes = diff_changes(
+        file_df,
+        db_df,
+        primary_key,
+        columns,
+        delete_not_in_file=delete_not_in_file,
+    )
+    kind = F.col(KIND_COL)
+    after = [F.col(AFTER_COL).getField(c).alias(c) for c in columns]
+    before = [F.col(BEFORE_COL).getField(c).alias(c) for c in columns]
+    return DiffResult(
+        to_insert=changes.filter(kind == "insert").select(*after),
+        to_update=changes.filter(kind == "update").select(*after, BEFORE_COL),
+        to_delete=changes.filter(kind == "delete").select(*before),
+        changes=changes,
+    )

@@ -178,10 +178,12 @@ def maintain_rollup_onepass(
     the snapshots in ONE classification pass (r14 optimization).
 
     The legacy composition — ``maintain_rollup(state,
-    diff_snapshots(f, d, pk), ...)`` — expands to FIVE wide joins at
-    plan level: insert anti, delete anti, and the update inner join
-    *twice* (its subtree feeds both the after- and before-value leg,
-    and Spark does not dedupe common subtrees across union branches).
+    diff_snapshots(f, d, pk), ...)`` — repeats the diff's full-outer
+    classification join, carrying EVERY sync column, under four union
+    branches at plan level: the insert leg, the delete leg, and the
+    update leg twice (after- and before-value). Spark does not dedupe
+    common subtrees across union branches, so the join runs once per
+    branch (exchange reuse can at best share its shuffles).
     Here :func:`~mydatasyncer_spark.operators.diff.diff_changes`
     classifies in one narrow full-outer join carrying only
     ``(key, fingerprint, group_cols, value_col)``, each changed row

@@ -119,11 +119,13 @@ def scd2_apply_onepass(
     """:func:`scd2_apply` in one classification pass (r14
     optimization).
 
-    The legacy leg composition expands to FIVE wide join subtrees at
-    plan level: the diff's insert anti + update inner (the update
-    subtree feeding both closing_keys and opened), plus the
-    closed/surviving semi/anti pair re-joining the current slice
-    against the closing keys. But every SCD2 decision is per-key —
+    The legacy leg composition expands to six join subtrees at plan
+    level: the diff's full-outer classification join under each of
+    the four legs it feeds (update and delete into closing_keys,
+    insert and update into opened — Spark does not dedupe common
+    subtrees across union branches), plus the closed/surviving
+    semi/anti pair re-joining the current slice against the closing
+    keys. But every SCD2 decision is per-key —
     close, survive, open — so one full-outer join of ``(canonical_key,
     row_fingerprint, row)`` between the snapshot and the CURRENT slice
     classifies each key, and each joined row explodes directly into

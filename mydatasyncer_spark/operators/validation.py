@@ -127,21 +127,25 @@ def validate_primary_keys(
     by_reason = {r["reason"]: r["n"] for r in agg if r["reason"] is not None}
     total = sum(r["n"] for r in agg)
     invalid = sum(by_reason.values())
-    dup_rows = []
-    if primary_key in df.columns:
-        dup_rows = (
-            df.groupBy(F.col(primary_key).cast("string").alias("key"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter("n > 1")
-            .orderBy(F.desc("n"), "key")
+    dup_rows, samples = [], []
+    # every repeated key and every nullish key already counts as an
+    # invalid row (annotate_issues), so a clean histogram means both
+    # lists are empty: skip their two queries
+    if invalid:
+        if primary_key in df.columns:
+            dup_rows = (
+                df.groupBy(F.col(primary_key).cast("string").alias("key"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .filter("n > 1")
+                .orderBy(F.desc("n"), "key")
+                .limit(SAMPLE_LIMIT)
+                .collect()
+            )
+        samples = (
+            annotated.filter(F.col("reason").isNotNull())
             .limit(SAMPLE_LIMIT)
             .collect()
         )
-    samples = (
-        annotated.filter(F.col("reason").isNotNull())
-        .limit(SAMPLE_LIMIT)
-        .collect()
-    )
     report = ValidationReport(
         total=total,
         invalid=invalid,

@@ -1,11 +1,15 @@
 """Dry-run execution plan (O8, ref: generateExecutionPlan,
 dbsync.go:347-400 and ExecutionPlan.String() 160-250).
 
-The plan is built from the lazy diff DataFrames with ``count()`` for
-totals and an **ordered** ``limit(n)`` for samples (ordering before
-limit keeps reports deterministic — the reference sorts everywhere
-for the same reason). Nothing else is materialized on the driver, so
-a dry-run against a 100 TB table costs three aggregates.
+The plan is built from the diff with :meth:`DiffResult.counts` for
+totals — one ``groupBy(_kind)`` aggregate over the classified change
+frame — and an **ordered** ``limit(n)`` per leg for samples (ordering
+before limit keeps reports deterministic — the reference sorts
+everywhere for the same reason). Nothing else is materialized on the
+driver, so a dry-run against a 100 TB table costs one classification
+join, one aggregate and three top-n reads of the changed rows; with
+the diff pinned (the syncer's path) the join runs once and every
+later read hits the pin.
 """
 
 from __future__ import annotations
@@ -85,6 +89,7 @@ def build_plan(
             r.asDict() for r in df.orderBy(primary_key).limit(sample_rows).collect()
         ]
 
+    counts = diff.counts()
     update_samples = [
         r.asDict(recursive=True)
         for r in diff.to_update.orderBy(primary_key).limit(sample_rows).collect()
@@ -98,9 +103,9 @@ def build_plan(
         immutable_columns=list(immutable_columns or []),
         file_count=file_count,
         db_count=db_count,
-        insert_count=diff.to_insert.count(),
-        update_count=diff.to_update.count(),
-        delete_count=diff.to_delete.count(),
+        insert_count=counts["insert"],
+        update_count=counts["update"],
+        delete_count=counts["delete"],
         insert_samples=sample(diff.to_insert),
         update_samples=update_samples,
         delete_samples=sample(diff.to_delete),

@@ -72,9 +72,7 @@ def sync_batch(
         columns=cols,
         delete_not_in_file=spec.delete_not_in_file,
     )
-    diff.to_insert.persist()
-    diff.to_update.persist()
-    diff.to_delete.persist()
+    diff.persist()
     try:
         with Transaction(backend.conn):
             return apply_diff(
@@ -89,9 +87,7 @@ def sync_batch(
                 immutable_columns=spec.immutable_columns,
             )
     finally:
-        diff.to_insert.unpersist()
-        diff.to_update.unpersist()
-        diff.to_delete.unpersist()
+        diff.unpersist()
 
 
 def continuous_merge(

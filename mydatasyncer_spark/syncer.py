@@ -9,8 +9,9 @@ writes:
    the transaction opens, ref: dbsync.go:936-951);
 2. strict PK validation for diff-mode tables (V1);
 3. resolve sync columns per table (P4/P5);
-4. compute diff triples (J2-J4), persisted so the write transaction
-   never waits on a recomputation;
+4. compute diff triples (J2-J4): one classified change frame per
+   table, persisted once so the plan, staging and the write
+   transaction all read it and never wait on a recomputation;
 5. dry-run → build plans and stop, zero writes (O8);
 6. else apply: single table in insert→update→delete order inside one
    transaction; multi-table in two phases inside ONE global
@@ -79,6 +80,9 @@ class _Prepared:
     db_df: DataFrame
     diff: DiffResult | None
     file_empty: bool
+    # file row count when already known (0 for an empty file, the
+    # validation report's total in diff mode); None = count on demand
+    file_count: int | None
 
 
 class Syncer:
@@ -125,8 +129,11 @@ class Syncer:
             config_cols=spec.columns,
             primary_key=spec.primary_key,
         )
+        file_count = 0 if file_empty else None
         if spec.sync_mode == SYNC_MODE_DIFF and not file_empty:
-            validate_primary_keys(file_df, spec.primary_key, strict=True)
+            file_count = validate_primary_keys(
+                file_df, spec.primary_key, strict=True
+            ).total
         db_df = self.backend.read_snapshot(self.spark, spec.name, cols)
         diff = None
         if spec.sync_mode == SYNC_MODE_DIFF:
@@ -152,17 +159,15 @@ class Syncer:
                     columns=cols,
                     delete_not_in_file=spec.delete_not_in_file,
                 )
-            # persist: the write tx must not re-trigger the scan/join
-            diff.to_insert.persist()
-            diff.to_update.persist()
-            diff.to_delete.persist()
-        return _Prepared(spec, cols, file_df, db_df, diff, file_empty)
+            # persist: the plan, staging and the write tx must not
+            # re-trigger the scan/join
+            diff.persist()
+        return _Prepared(spec, cols, file_df, db_df, diff, file_empty, file_count)
 
     def _plan_for(self, prep: _Prepared) -> ExecutionPlan:
         spec = prep.spec
+        diff = prep.diff
         if spec.sync_mode == SYNC_MODE_OVERWRITE:
-            file_n = 0 if prep.file_empty else prep.file_df.count()
-            db_n = prep.db_df.count()
             # overwrite plan = delete-all + insert-all (ref: dbsync.go:359-370)
             empty = prep.db_df.limit(0)
             to_insert = (
@@ -173,24 +178,13 @@ class Syncer:
                 else empty
             )
             diff = DiffResult(to_insert, empty, prep.db_df)
-            return build_plan(
-                spec.name,
-                spec.sync_mode,
-                spec.primary_key,
-                prep.sync_columns,
-                diff,
-                file_n,
-                db_n,
-                spec.timestamp_columns,
-                spec.immutable_columns,
-            )
         return build_plan(
             spec.name,
             spec.sync_mode,
             spec.primary_key,
             prep.sync_columns,
-            prep.diff,
-            0 if prep.file_empty else prep.file_df.count(),
+            diff,
+            prep.file_df.count() if prep.file_count is None else prep.file_count,
             prep.db_df.count(),
             spec.timestamp_columns,
             spec.immutable_columns,
@@ -366,9 +360,7 @@ class Syncer:
     def _unpersist(prepared: dict[str, _Prepared]) -> None:
         for prep in prepared.values():
             if prep.diff is not None:
-                prep.diff.to_insert.unpersist()
-                prep.diff.to_update.unpersist()
-                prep.diff.to_delete.unpersist()
+                prep.diff.unpersist()
 
 
 def sync(

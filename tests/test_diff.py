@@ -572,3 +572,140 @@ class TestScd2Randomized:
             # live keys carry exactly one current version each
             cur = [k for k, _, _, to, _ in got if to is None]
             assert sorted(cur) == sorted(snap), seed
+
+
+def _multiset(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _types(df):
+    # names and types; nullability is left out (a leg projected from
+    # the full outer join is nullable where the leg-wise join was not)
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
+class TestLegsMatchDetect:
+    """The legs of diff_snapshots (one classified full-outer frame)
+    must be, row for row and type for type, the leg-wise
+    detect_inserts / detect_updates / detect_deletes triple, on seeded
+    random frames with NULL keys, repeated DB keys, a long file key
+    against a string DB key (J5) and a column whose name holds a dot."""
+
+    COLS = ["id", "v", "a.b"]
+
+    @staticmethod
+    def frames(spark, seed):
+        import random
+
+        rng = random.Random(seed)
+        n = 80
+
+        def val():
+            return rng.choice([None, "", "x", "y", "z"])
+
+        rows_f = [
+            (k, rng.randint(0, 2), val(), rng.random())
+            for k in range(n)
+            if rng.random() < 0.7
+        ]
+        rows_f += [(None, rng.randint(0, 2), val(), 0.0) for _ in range(3)]
+        rows_d = [
+            (str(k), rng.randint(0, 2), val())
+            for k in range(n)
+            if rng.random() < 0.7
+        ]
+        # repeated DB-side keys (some also in the file); NULL keys
+        # canonicalize to "" and so match each other across sides: odd
+        # seeds pair the file's NULL keys with DB ones, even seeds
+        # leave them unmatched
+        rows_d += [
+            (str(rng.randrange(n)), rng.randint(0, 2), val()) for _ in range(8)
+        ]
+        if seed % 2:
+            rows_d += [(None, 1, "x"), (None, 2, None)]
+        f = spark.createDataFrame(
+            rows_f, "id long, v long, `a.b` string, file_only double"
+        )
+        d = spark.createDataFrame(rows_d, "id string, v long, `a.b` string")
+        return f, d
+
+    @pytest.mark.parametrize(
+        "seed,delete_not_in_file", [(11, True), (12, False), (13, True)]
+    )
+    def test_legs_equal_detect_triple(self, spark, seed, delete_not_in_file):
+        from pyspark.sql import functions as F
+
+        f, d = self.frames(spark, seed)
+        cols = [F.col(f"`{c}`") for c in self.COLS]
+        fp, dp = f.select(*cols), d.select(*cols)
+        got = diff_snapshots(f, d, "id", delete_not_in_file=delete_not_in_file)
+        want_ins = detect_inserts(fp, dp, "id")
+        want_upd = detect_updates(fp, dp, "id", self.COLS)
+        want_del = detect_deletes(fp, dp, "id")
+        if not delete_not_in_file:
+            want_del = want_del.limit(0)
+        for leg, want in (
+            (got.to_insert, want_ins),
+            (got.to_update, want_upd),
+            (got.to_delete, want_del),
+        ):
+            assert _types(leg) == _types(want)
+            assert _multiset(leg) == _multiset(want)
+        assert got.counts() == {
+            "insert": want_ins.count(),
+            "update": want_upd.count(),
+            "delete": want_del.count(),
+        }
+        # the generator must actually reach every case it claims
+        null_leg = want_upd if seed % 2 else want_ins
+        assert null_leg.filter("id IS NULL").count() > 0
+        assert want_upd.count() > 0
+        assert d.groupBy("id").count().filter("count > 1").count() > 0
+
+    def test_dotted_column_update_reads_by_field(self, spark):
+        f = spark.createDataFrame([(1, "new")], "id long, `a.b` string")
+        d = spark.createDataFrame([("1", "old")], "id string, `a.b` string")
+        upd = diff_snapshots(f, d, "id").to_update.collect()
+        assert upd[0]["a.b"] == "new"
+        assert upd[0][BEFORE_COL]["a.b"] == "old"
+
+
+def _leaf_names(df):
+    """Node names of the leaves of ``df``'s physical plan, before
+    execution (the adaptive plan's initial plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.length())]
+
+
+class TestPinnedDiff:
+    """diff.persist() pins the one classified frame: after one action
+    on a leg, the other legs and counts() read the pin and never the
+    source files again."""
+
+    def test_legs_and_counts_read_the_pin(self, spark, snapshots, tmp_path):
+        import shutil
+
+        file_df, db_df = snapshots
+        file_df.write.parquet(str(tmp_path / "file"))
+        db_df.write.parquet(str(tmp_path / "db"))
+        f = spark.read.parquet(str(tmp_path / "file"))
+        d = spark.read.parquet(str(tmp_path / "db"))
+        diff = diff_snapshots(f, d, "id").persist()
+        try:
+            assert [r["id"] for r in diff.to_insert.collect()] == [4]
+            for leg in (diff.to_update, diff.to_delete):
+                names = _leaf_names(leg)
+                assert "InMemoryTableScan" in names, names
+                assert not any(n.startswith("Scan") for n in names), names
+            # with the sources gone, any re-read would fail
+            shutil.rmtree(tmp_path / "file")
+            shutil.rmtree(tmp_path / "db")
+            assert diff.counts() == {"insert": 1, "update": 1, "delete": 1}
+            assert [r["id"] for r in diff.to_delete.collect()] == [3]
+        finally:
+            diff.unpersist()

@@ -283,6 +283,44 @@ class TestMultiTable:
         assert rows(fk_db, "products") == before_prod
 
 
+class TestReadSnapshot:
+    """DbApiBackend.read_snapshot builds the DataFrame through Arrow;
+    schema and rows must equal the per-row tuple build it replaced."""
+
+    def test_arrow_build_matches_tuple_build(self, spark):
+        conn = sqlite3.connect(":memory:")
+        conn.execute("CREATE TABLE t (i INTEGER, r REAL, s TEXT, b BLOB)")
+        conn.executemany(
+            "INSERT INTO t VALUES (?, ?, ?, ?)",
+            [
+                (1, 1.5, "x", b"\x00\x01"),
+                (None, 2.0, None, None),
+                (-(2**63), None, "", b""),
+                (None, -0.25, "z", b"\xff"),
+            ],
+        )
+        cols = ["i", "r", "s", "b"]
+        got = DbApiBackend(conn).read_snapshot(spark, "t", cols)
+        raw = conn.execute("SELECT i, r, s, b FROM t").fetchall()
+        want = spark.createDataFrame([tuple(r) for r in raw], cols)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+
+    def test_all_null_column_reads_as_string(self, spark):
+        conn = sqlite3.connect(":memory:")
+        conn.execute("CREATE TABLE t (id INTEGER, n INTEGER)")
+        conn.executemany("INSERT INTO t VALUES (?, ?)", [(1, None), (2, None)])
+        df = DbApiBackend(conn).read_snapshot(spark, "t", ["id", "n"])
+        assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+            ("id", "bigint"),
+            ("n", "string"),
+        ]
+        assert [tuple(r) for r in df.orderBy("id").collect()] == [
+            (1, None),
+            (2, None),
+        ]
+
+
 class TestStagingApplier:
     # full-suite-only (pytest.ini fast gate); run with -m slow
     pytestmark = pytest.mark.slow

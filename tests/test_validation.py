@@ -72,6 +72,54 @@ def test_clean_data_passes(spark):
     assert report.invalid == 0 and report.total == 2
 
 
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3, 4])
+def test_clean_key_skips_duplicate_and_sample_queries(spark, seed):
+    """Every repeated and every nullish key is an invalid row, so with
+    no invalid row the duplicate-key and sample lists are empty by
+    construction and their two queries are skipped. Checked against a
+    driver-side count of the same keys on seeded random columns, some
+    clean and some not."""
+    import random
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(seed)
+    keys = [str(rng.randrange(10_000)) for _ in range(40)]
+    if seed % 2 == 0:
+        keys += [keys[0], rng.choice(["", "null", None])]
+    df = spark.createDataFrame([(k,) for k in keys], "id string")
+    report, jobs = _jobs_of(
+        spark, f"validate-{seed}", lambda: validate_primary_keys(df, "id", strict=False)
+    )
+    repeated = {k for k, n in Counter(keys).items() if n > 1}
+    if report.invalid == 0:
+        assert not repeated and report.duplicate_keys == [] and report.samples == []
+        # the reason histogram is the only query a clean key runs
+        _, histogram_jobs = _jobs_of(
+            spark,
+            f"histogram-{seed}",
+            lambda: annotate_issues(df, "id")
+            .groupBy("reason")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect(),
+        )
+        assert jobs == histogram_jobs
+    else:
+        assert {k for k, _ in report.duplicate_keys} == repeated
+        assert len(report.samples) == report.invalid
+
+
 class TestProfileColumns:
     def test_profile_stats(self, spark):
         from mydatasyncer_spark.operators.validation import profile_columns
