@@ -285,7 +285,7 @@ class TestMultiTable:
 
 class TestReadSnapshot:
     """DbApiBackend.read_snapshot builds the DataFrame through Arrow;
-    schema and rows must equal the per-row tuple build it replaced."""
+    schema and rows must equal a per-row tuple build of the same rows."""
 
     def test_arrow_build_matches_tuple_build(self, spark):
         conn = sqlite3.connect(":memory:")
